@@ -594,12 +594,9 @@ def q_ranker_full(spark, sf):
         search_size=10,
         length_diff=RANKER_LENGTH_DIFF,
         calc_cosine=True,
+        calc_predict=True,
+        pair_scorer=_make_conf_scorer_udf(),
     )
-    # conf scored AFTER the top-k prune (|Q|·k rows, not the |Q|·|C|
-    # cross product — at 10^12 candidates scoring pre-window would put
-    # the whole pair set through Python); same output, since with
-    # ranking_metric='faiss' dl_match participates in no filter
-    scorer = _make_conf_scorer_udf()
     return r.select(
         "query_id",
         "query",
@@ -610,9 +607,7 @@ def q_ranker_full(spark, sf):
         "candidate_id",
         F.round(F.col("faiss_dist") * 1e6).cast("long").alias("faiss_micro"),
         F.round(F.col("cosine_dist") * 1e6).cast("long").alias("cosine_micro"),
-        F.round(scorer(F.col("query"), F.col("candidate")) * 1e6)
-        .cast("long")
-        .alias("conf_micro"),
+        F.round(F.col("dl_match") * 1e6).cast("long").alias("conf_micro"),
         F.col("num_all_searches").cast("long").alias("num_all_searches"),
     )
 
@@ -658,7 +653,9 @@ def _ranker_full_expected():
             for y in cv:
                 dcc += y * y
             den = math.sqrt(dqq) * math.sqrt(dcc)
-            cos = 1.0 - dqc / den if den != 0.0 else float("nan")
+            # zero-norm vector: cosine is undefined — NULL, as Spark's
+            # non-ANSI division by zero gives (NaN cannot be rounded)
+            cos = 1.0 - dqc / den if den != 0.0 else None
             scored.append((fd, cid, corig, cnorm, cos))
         scored.sort(key=lambda r: (r[0], r[1]))
 
@@ -699,7 +696,8 @@ def _ranker_full_expected():
     return [
         (
             qid, qn, qo, rank, cn, co, cid,
-            _round_micro(fd), _round_micro(cos), _round_micro(p1), nas,
+            _round_micro(fd), None if cos is None else _round_micro(cos),
+            _round_micro(p1), nas,
         )
         for qid, qn, qo, rank, cn, co, cid, fd, cos, p1, nas in out
     ]
@@ -3775,7 +3773,7 @@ def oracle_sql() -> dict[str, str]:
         "select * from (values "
         + ", ".join(
             f"({qid}, {_sql_str(qn)}, {_sql_str(qo)}, {rank}, {_sql_str(cn)}, "
-            f"{_sql_str(co)}, {cid}, {fm}, {cm}, {pm}, {nas})"
+            f"{_sql_str(co)}, {cid}, {fm}, {'NULL' if cm is None else cm}, {pm}, {nas})"
             for qid, qn, qo, rank, cn, co, cid, fm, cm, pm, nas in _ranker_full_expected()
         )
         + ") as t(query_id, query, query_orig, rank, candidate, candidate_orig, "

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .functions.udfs import normalize_udf, tokenize_udf
 from .model.numpy_rnn import SiameseRNN
 from .model.scorer_udf import (
+    encode_keys,
     load_artifacts,
     make_encode_vec_udf,
     make_missing_ratio_udf,
@@ -42,7 +43,7 @@ from .model.train_numpy import fit as _fit_encoder
 from .operators.ranker import candidate_ranker as _ranker
 from .operators.split import train_val_test_split
 from .sources.tsv import read_pairs_tsv
-from .text import Vocabulary, encode_tokens, pad_sequence, string_split
+from .text import Vocabulary, encode_tokens, normalize_string, pad_sequence, string_split
 
 SEED = 1364  # DeezyMatch.py:33
 
@@ -500,6 +501,25 @@ def combine_vecs(*_args, **_kwargs):
     )
 
 
+def _query_store(spark: SparkSession, artifact_path: str, keys: list) -> DataFrame:
+    """Raw strings → [id, key, key_norm, vec] query store, normalized
+    and encoded on the driver exactly as ``inference(mode='vect')``
+    does on executors; ``createDataFrame`` of an Arrow table runs no
+    UDF."""
+    import pandas as pd
+    import pyarrow as pa
+
+    key_norm = [normalize_string(x) if x is not None else None for x in keys]
+    vecs = encode_keys(pd.Series(key_norm, dtype=object), artifact_path)
+    table = pa.table({
+        "id": pa.array(range(len(keys)), pa.int64()),
+        "key": pa.array(keys, pa.string()),
+        "key_norm": pa.array(key_norm, pa.string()),
+        "vec": pa.array(list(vecs), pa.list_(pa.float32())),
+    })
+    return spark.createDataFrame(table)
+
+
 def candidate_ranker(
     spark: SparkSession,
     queries: DataFrame | None = None,
@@ -519,13 +539,23 @@ def candidate_ranker(
     without a pre-built query store (candidateRanker.py:326-334,
     utils_candidate_ranker.py:15-85). The reference spins up a temp
     scenario on disk (tokenize → test_model → combine_vecs → load);
-    here the same thing is one in-plan vect pass: a |query|-row
-    DataFrame through ``inference(mode='vect')`` with the artifact's
-    encoder, producing the identical [id, key, key_norm, vec] store
-    the scenario path would load. Takes precedence over ``queries``
-    (reference behavior: the ``query`` branch overrides
-    query_scenario). Requires ``artifact_path``. Query ids are the
-    list positions 0..n-1, matching the reference's row order."""
+    here the list is already in driver memory, so it is normalized and
+    encoded ON THE DRIVER with the artifact's numpy model
+    (``scorer_udf.encode_keys`` — the same encoder the store's
+    ``inference(mode='vect')`` UDF runs) and handed to Spark as an
+    Arrow table, which the JVM reads with no Python workers. The
+    result is the identical [id, key, key_norm, vec] store the
+    scenario path would load. Meant for interactive, request-sized
+    lists; bulk query sets belong in a ``queries`` DataFrame built
+    with ``inference(mode='vect')``, which encodes on executors.
+    Takes precedence over ``queries`` (reference behavior: the
+    ``query`` branch overrides query_scenario). Requires
+    ``artifact_path``. Query ids are the list positions 0..n-1,
+    matching the reference's row order.
+
+    ``dl_match`` (calc_predict / conf) comes from the artifact's
+    siamese scorer; where the ranker computes it is documented in
+    ``operators.ranker.candidate_ranker``."""
     if query is not None:
         if artifact_path is None:
             raise ValueError(
@@ -535,12 +565,7 @@ def candidate_ranker(
         qlist = [query] if isinstance(query, str) else list(query)
         if not qlist:
             raise ValueError("query list is empty")
-        qdf = spark.createDataFrame(
-            [(i, s) for i, s in enumerate(qlist)], "id bigint, key string"
-        )
-        queries = inference(
-            spark, artifact_path, qdf, inference_mode="vect", key_col="key"
-        ).select("id", "key", "key_norm", "vec")
+        queries = _query_store(spark, artifact_path, qlist)
     if queries is None or candidates is None:
         raise ValueError("need candidates and either queries or query=[...]")
     scorer = None

@@ -29,6 +29,7 @@ from ..text import encode_tokens, pad_sequence, string_split
 from .numpy_rnn import SiameseRNN
 
 __all__ = [
+    "encode_keys",
     "load_artifacts",
     "make_encode_vec_udf",
     "make_pair_scorer_udf",
@@ -153,16 +154,24 @@ def _batch_classify(model, X1, l1, X2, l2):
     return p0, p1, pred
 
 
+def encode_keys(key_norm: pd.Series, artifact_path: str) -> np.ndarray:
+    """One batch of normalized strings → float32 vecs [n, 2H] — the
+    single encoder behind the embedding store (``make_encode_vec_udf``,
+    on executors) and on-the-fly ranker queries
+    (``api.candidate_ranker(query=[...])``, on the driver). ``None``
+    encodes as the empty string."""
+    model, vocab, cfg = load_artifacts(artifact_path)
+    X, lens = _encode_batch(key_norm, vocab, cfg)
+    return np.asarray(_batch_encode(model, X, lens), dtype=np.float32)
+
+
 def make_encode_vec_udf(artifact_path: str):
     """(key_norm) → array<float> of dim 2H (fwd‖bwd h_n) — N5."""
 
     @pandas_udf(ArrayType(FloatType()))
     def encode_vec(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        model, vocab, cfg = load_artifacts(artifact_path)
         for s in batches:
-            X, lens = _encode_batch(s, vocab, cfg)
-            vecs = _batch_encode(model, X, lens)
-            yield pd.Series(list(np.asarray(vecs, dtype=np.float32)))
+            yield pd.Series(list(encode_keys(s, artifact_path)))
 
     return encode_vec
 

@@ -28,7 +28,7 @@ shuffles are the explode→join on block_key, sized via
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.hashing import lsh_band_keys, minhash_base, minhash_from_base
 from ..functions.ngrams import distinct_char_ngrams, prefix_ngram_keys, word_tokens
@@ -274,10 +274,14 @@ def block_join(
         raise ValueError(f"cap_mode must be 'drop' or 'downsample', got {cap_mode!r}")
     left_keys = _hash_block_keys(left_keys)
     right_keys = _hash_block_keys(right_keys)
-    both = left_keys.select("block_key").unionByName(right_keys.select("block_key"))
+    # one aggregation yields the union count (the cap test) and the
+    # right side's count (_br); the left side's is _bs - _br
+    both = left_keys.select("block_key", F.lit(0).alias("_side")).unionByName(
+        right_keys.select("block_key", F.lit(1).alias("_side"))
+    )
     overcap = (
         both.groupBy("block_key")
-        .agg(F.count("*").alias("_bs"))
+        .agg(F.count("*").alias("_bs"), F.sum("_side").alias("_br"))
         .where(F.col("_bs") > max_block_size)
         .localCheckpoint(eager=False)
     )
@@ -285,20 +289,19 @@ def block_join(
     lk = left_keys.join(F.broadcast(dropped), "block_key", "left_anti")
     rk = right_keys.join(F.broadcast(dropped), "block_key", "left_anti")
     if cap_mode == "downsample":
-        # per-side floor: each side keeps up to max_block_size members of
-        # an over-cap key (bounding that key's pairs at cap^2, spread by
-        # the salting below); _bs is the union count, a valid modulus
-        # for the pre-thin on either side
-        lk = lk.unionByName(
-            _downsample_overcap(
-                left_keys.join(F.broadcast(overcap), "block_key"), max_block_size
+        # per-side floor: each side keeps min(its count, max_block_size)
+        # members of an over-cap key (bounding that key's pairs at
+        # cap^2, spread by the salting below). The pre-thin modulus is
+        # the SIDE's own count: the union count would thin a small side
+        # facing a huge one (1k queries vs 199k candidates) to ~nothing
+        def floor(side: DataFrame, side_count: Column) -> DataFrame:
+            sizes = overcap.select("block_key", side_count.alias("_bs"))
+            return _downsample_overcap(
+                side.join(F.broadcast(sizes), "block_key"), max_block_size
             )
-        )
-        rk = rk.unionByName(
-            _downsample_overcap(
-                right_keys.join(F.broadcast(overcap), "block_key"), max_block_size
-            )
-        )
+
+        lk = lk.unionByName(floor(left_keys, F.col("_bs") - F.col("_br")))
+        rk = rk.unionByName(floor(right_keys, F.col("_br")))
 
     rk = rk.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col("id")), F.lit(n_salt)).cast("int")

@@ -95,6 +95,8 @@ def refine_centroids(
     budget as the seed itself). Empty lists keep their previous
     centroid. ``metric="cosine"`` runs spherical k-means (mean
     renormalized to unit length; zero-norm means kept unnormalized).
+    Every vector must have the centroids' dimension: a ragged one
+    raises ``ValueError`` after the first aggregation.
 
     Refined centroids tighten the lists (lower quantization error), so
     at EQUAL n_probe each probe covers more of a query's true
@@ -113,15 +115,25 @@ def refine_centroids(
         assigned = candidates.withColumn(
             "_l",
             F.array_min(centroid_dist_array(F.col(vec_col), cur, dist_fn))["list_id"],
-        ).select("_l", F.posexplode(F.col(vec_col)).alias("_p", "_x"))
+        ).select(
+            "_l",
+            (F.size(F.col(vec_col)) != dim).alias("_ragged"),
+            F.posexplode(F.col(vec_col)).alias("_p", "_x"),
+        )
         cells = (
             assigned.groupBy("_l", "_p")
             .agg(
                 F.sum(F.col("_x").cast("double")).alias("_s"),
                 F.count("*").alias("_n"),
+                F.max("_ragged").alias("_ragged"),
             )
             .collect()
         )
+        if any(r._ragged for r in cells):
+            raise ValueError(
+                f"refine_centroids: every {vec_col!r} vector must have the "
+                f"centroids' dimension {dim}; found ragged vectors"
+            )
         sums = {}
         counts = {}
         for r in cells:

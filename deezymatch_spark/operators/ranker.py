@@ -16,6 +16,11 @@ the reference's full-|C| exhaustion cap (candidateRanker.py:501-510) —
 a documented divergence, since blocked mode has no reference
 counterpart to be compatible with.
 
+Rank before scoring: the siamese GRU ``dl_match`` is the one Python
+(Arrow UDF) column in the plan. For ``faiss``/``cosine`` it is
+computed after the top-k window, on at most |Q|·num_candidates rows;
+only ``conf``, which ranks by it, scores the whole pair set.
+
 Semantic parity targets (reference test suite):
 - self-match faiss distance ≈ 0        (tests/test_pipeline_ngram.py:102-105)
 - faiss results invariant to calc_predict (test_pipeline_one_col_input.py:156-170)
@@ -85,7 +90,13 @@ def candidate_ranker(
 
     ``pair_scorer``: expression/UDF (s1_norm, s2_norm) → match
     probability p1 (the numpy-GRU siamese scorer; D3). Required when
-    calc_predict or ranking_metric='conf'.
+    calc_predict or ranking_metric='conf'. Where ``dl_match`` is
+    computed: for ``conf`` on every scored pair, before the filters,
+    dedup and rank (they all read it); for ``faiss``/``cosine`` with
+    calc_predict only on the final top-``num_candidates`` rows per
+    query, after the rank — at most |Q|·num_candidates scorer calls
+    instead of |Q|·|C|, with the same output, since those metrics read
+    dl_match in no filter, rank or ``num_all_searches``.
     """
     metric = ranking_metric.lower()
     validate_ranker_args(metric, selection_threshold)
@@ -119,12 +130,12 @@ def candidate_ranker(
         scored = scored.withColumn("cosine_dist", cosine_dist(F.col("_qv"), F.col("_cv")))
     else:
         scored = scored.withColumn("cosine_dist", F.lit(None).cast("double"))
-    if (calc_predict or metric == "conf") and pair_scorer is not None:
+    # conf filters and ranks by dl_match, so it scores every pair here;
+    # faiss/cosine score it after the top-k window (below)
+    if metric == "conf":
         scored = scored.withColumn(
             "dl_match", pair_scorer(F.col("query"), F.col("candidate"))
         )
-    else:
-        scored = scored.withColumn("dl_match", F.lit(None).cast("double"))
 
     # faiss ordering — the arrival order of the reference's windows.
     # Every window below partitions by query_id, so the whole post-score
@@ -223,6 +234,13 @@ def candidate_ranker(
         deduped.withColumn("rank", F.row_number().over(w_rank))
         .where(F.col("rank") <= num_candidates)
     )
+    if metric != "conf":
+        ranked = ranked.withColumn(
+            "dl_match",
+            pair_scorer(F.col("query"), F.col("candidate"))
+            if calc_predict and pair_scorer is not None
+            else F.lit(None).cast("double"),
+        )
 
     return ranked.select(
         "query_id",

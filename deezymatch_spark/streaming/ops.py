@@ -132,13 +132,33 @@ def refresh_hot_keys(
     ptr = blocklist_dir.rstrip("/") + "/_CURRENT"
     try:
         prev = _read_text(spark, ptr).strip()
-        version = int(prev.rsplit("v_", 1)[-1]) + 1
+        current = int(prev.rsplit("v_", 1)[-1])
     except Exception:
-        version = 1
+        current = 0
+    # a crash between the pointer's delete and rename leaves _CURRENT
+    # absent; the snapshot dirs still say which versions are taken, so
+    # an existing snapshot is never overwritten
+    version = max(current, _max_snapshot_version(spark, blocklist_dir)) + 1
     snap = blocklist_dir.rstrip("/") + f"/v_{version}"
     over_cap_block_keys(keys, max_block_size).write.mode("overwrite").parquet(snap)
     _write_text_atomic(spark, ptr, snap)
     return snap
+
+
+def _max_snapshot_version(spark, blocklist_dir: str) -> int:
+    """Largest N among ``<blocklist_dir>/v_<N>`` dirs (0 when none),
+    listed through the Hadoop FS API like the pointer itself."""
+    from ..pipeline import _fs_path
+
+    fs, hpath = _fs_path(spark, blocklist_dir.rstrip("/"))
+    if not fs.exists(hpath):
+        return 0
+    versions = [0]
+    for st in fs.listStatus(hpath):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("v_") and name[2:].isdigit():
+            versions.append(int(name[2:]))
+    return max(versions)
 
 
 def load_hot_keys(spark, blocklist_dir: str) -> DataFrame | None:

@@ -159,10 +159,9 @@ def _mini_store(spark, artifact, names):
     return df.withColumn("vec", make_encode_vec_udf(artifact)(F.col("key_norm")))
 
 
-def _ranked_set(df):
+def _ranked_dists(df):
     return {
-        (r.query, r.rank, r.candidate, round(r.faiss_dist, 6))
-        for r in df.collect()
+        (r.query_id, r.rank, r.candidate): r.faiss_dist for r in df.collect()
     }
 
 
@@ -173,16 +172,45 @@ def test_candidate_ranker_on_the_fly_query(spark, artifact):
     cands = _mini_store(
         spark, artifact, ["london", "londen", "paris", "pariss", "berlin"]
     )
-    qnames = ["London", "  Paris"]
+    # None, an empty string and an all-out-of-vocabulary string ride
+    # along: the driver-side encoder must treat them like the store's
+    qnames = ["London", "  Paris", None, "", "\u2603\u265e\u2602"]
     kw = dict(
         artifact_path=artifact, ranking_metric="faiss",
-        selection_threshold=100.0, num_candidates=3,
+        selection_threshold=1000.0, num_candidates=3,
     )
     on_fly = api.candidate_ranker(spark, candidates=cands, query=qnames, **kw)
     store = api.candidate_ranker(
         spark, _mini_store(spark, artifact, qnames), cands, **kw
     )
-    assert _ranked_set(on_fly) == _ranked_set(store)
+    fly_d, store_d = _ranked_dists(on_fly), _ranked_dists(store)
+    assert fly_d.keys() == store_d.keys()
+    assert {q for q, _, _ in fly_d} == {0, 1, 2, 3, 4}
+    for k, d in fly_d.items():
+        assert abs(d - store_d[k]) <= 1e-6, (k, d, store_d[k])
+    by_id = {r.query_id: (r.query, r.query_orig) for r in on_fly.collect()}
+
+    # the query store the ranker builds on the driver == the executor
+    # vect pass over the same strings
+    drv = {r.id: r for r in api._query_store(spark, artifact, qnames).collect()}
+    vect = {
+        r.id: r
+        for r in api.inference(
+            spark, artifact,
+            spark.createDataFrame(list(enumerate(qnames)), "id long, key string"),
+            inference_mode="vect", key_col="key",
+        ).collect()
+    }
+    assert drv.keys() == vect.keys() == set(range(len(qnames)))
+    for i, r in drv.items():
+        assert r.key == vect[i].key == qnames[i]
+        assert r.key_norm == vect[i].key_norm
+        assert by_id[i] == (r.key_norm, qnames[i])
+        assert len(r.vec) == len(vect[i].vec)
+        assert np.allclose(r.vec, vect[i].vec, rtol=0.0, atol=1e-6)
+    assert drv[2].key_norm is None and drv[3].key_norm == ""
+    # None, "" and the all-OOV string all encode as the empty sequence
+    assert np.allclose(drv[2].vec, drv[4].vec, rtol=0.0, atol=1e-6)
     # single raw string accepted like the reference
     one = api.candidate_ranker(spark, candidates=cands, query="London", **kw)
     assert {r.query_orig for r in one.collect()} == {"London"}

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from deezymatch_spark.operators.blocking import (
     _size_split,
+    block_join,
     blocking_preflight,
     scored_candidate_pairs,
 )
@@ -91,3 +92,31 @@ def test_preflight_prices_downsample_floor(spark):
     }["TOTAL"]
     assert total_drop == 10   # C(5,2) only
     assert total_down == 55   # + C(10,2) for the downsampled block
+
+
+def test_block_join_downsample_asymmetric_sides(spark):
+    # key 1: 3 left vs 300 right members (the 1k-queries-vs-199k-store
+    # shape in miniature); key 2: 25 left vs 1 right. Both are over the
+    # cap of 10 on the union count; each side must keep
+    # min(its own count, cap) members, never be thinned by the union
+    # count of the other side.
+    left = spark.createDataFrame(
+        [(i, "k1") for i in range(3)] + [(100 + i, "k2") for i in range(25)],
+        "id long, block_key string",
+    )
+    right = spark.createDataFrame(
+        [(1000 + i, "k1") for i in range(300)] + [(5000, "k2")],
+        "id long, block_key string",
+    )
+    pairs = block_join(left, right, max_block_size=10, cap_mode="downsample").collect()
+    k1 = [(r.id1, r.id2) for r in pairs if r.id1 < 100]
+    k2 = [(r.id1, r.id2) for r in pairs if r.id1 >= 100]
+    assert {a for a, _ in k1} == {0, 1, 2}       # small side kept whole
+    assert len({b for _, b in k1}) == 10         # big side capped
+    assert len(k1) == 3 * 10
+    assert len({a for a, _ in k2}) == 10
+    assert {b for _, b in k2} == {5000}
+    assert len(k2) == 10 * 1
+
+    # drop mode removes both over-cap keys
+    assert block_join(left, right, max_block_size=10).count() == 0

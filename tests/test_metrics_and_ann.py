@@ -131,6 +131,24 @@ def test_refine_centroids_improves_or_matches_recall_at_equal_probes(spark):
         assert abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-9
 
 
+def test_refine_centroids_rejects_ragged_vectors(spark):
+    import pytest
+
+    from deezymatch_spark.operators import refine_centroids
+
+    c = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0, 1.0])],
+        "id long, vec array<double>",
+    )
+    with pytest.raises(ValueError, match="ragged"):
+        refine_centroids(c, "vec", [[1.0, 0.0], [0.0, 1.0]], iters=1)
+    # fixed-dimension input still refines
+    ok = refine_centroids(
+        c.where(F.col("id") < 2), "vec", [[1.0, 0.0], [0.0, 1.0]], iters=1
+    )
+    assert ok == [[1.0, 0.0], [0.0, 1.0]]
+
+
 def test_knn_preflight_prices_probe_join_exactly(spark):
     """knn_preflight's est_pairs must equal the probe join's actual
     scored-pair volume (pre-window) at the same (n_lists, n_probe) —

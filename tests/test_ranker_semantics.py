@@ -141,3 +141,65 @@ def test_num_all_searches_compat(spark):
     ).collect()
     for r in out2:
         assert r.num_all_searches == 10  # exhausted: capped at |C|
+
+
+def _counting_scorer(spark):
+    """→ (accumulator, scorer UDF, value fn): an Arrow UDF scorer that
+    adds every batch's length to the accumulator; its score is
+    ``value(a, b)``, a deterministic function of the pair (defined in
+    here so it pickles by value to the workers)."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def value(a, b):
+        import zlib
+
+        return zlib.crc32(f"{a}|{b}".encode()) % 10007 / 10007
+
+    @pandas_udf("double")
+    def score(a: pd.Series, b: pd.Series) -> pd.Series:
+        seen.add(len(a))
+        return pd.Series([value(x, y) for x, y in zip(a, b)])
+
+    return seen, score, value
+
+
+@pytest.mark.parametrize("metric", ["faiss", "cosine"])
+def test_dl_match_scored_after_top_k(spark, metric):
+    keys = [f"key{i:02d}" for i in range(12)]
+    t = _emb_table(spark, keys)
+    q = t.where(F.col("id") < 5)
+    seen, scorer, value = _counting_scorer(spark)
+    k = 3
+    out = candidate_ranker(
+        q, t, ranking_metric=metric,
+        selection_threshold=1e9 if metric == "faiss" else 1.0,
+        num_candidates=k, calc_predict=True, pair_scorer=scorer,
+    ).collect()
+    assert {r.query_id for r in out} == set(range(5))
+    # the scorer saw only the emitted rows, not the 5 x 12 cross join
+    assert seen.value == len(out) <= 5 * k
+    for r in out:
+        assert r.dl_match == value(r.query, r.candidate)
+
+
+def test_conf_ranks_by_scorer_over_every_pair(spark):
+    keys = [f"key{i:02d}" for i in range(12)]
+    t = _emb_table(spark, keys)
+    q = t.where(F.col("id") < 5)
+    seen, scorer, value = _counting_scorer(spark)
+    out = candidate_ranker(
+        q, t, ranking_metric="conf", selection_threshold=0.0,
+        num_candidates=3, pair_scorer=scorer,
+    ).collect()
+    assert seen.value >= 5 * 12  # conf ranks by dl_match: every pair scored
+    by_q = {}
+    for r in out:
+        assert r.dl_match == value(r.query, r.candidate)
+        by_q.setdefault(r.query_id, []).append(r)
+    for qid, rs in by_q.items():
+        rs.sort(key=lambda r: r.rank)
+        best = sorted((value(keys[qid], c) for c in keys), reverse=True)[:3]
+        assert [r.dl_match for r in rs] == best

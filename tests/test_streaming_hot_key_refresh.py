@@ -113,3 +113,30 @@ def test_refresh_caps_newly_hot_key_and_preserves_prior_matches(spark, tmp_path)
     _run_once(spark, feed, out2, ckpt2, hot0)
     stale = {(r.id1, r.id2) for r in spark.read.parquet(out2).collect()}
     assert len(stale) > len(phase1)
+
+
+def test_refresh_versions_past_existing_snapshots_without_pointer(spark, tmp_path):
+    """A crash between the pointer's delete and rename leaves v_1 but
+    no _CURRENT: the next refresh must publish v_2, not overwrite v_1."""
+    import os
+
+    from deezymatch_spark.streaming.ops import load_hot_keys, refresh_hot_keys
+
+    feed = str(tmp_path / "feed")
+    bl = str(tmp_path / "blocklist")
+    _pages(spark, [
+        (f"u://h{i}", i, "hot title here") for i in range(5)
+    ]).write.mode("append").parquet(feed)
+
+    v1 = refresh_hot_keys(spark, feed, bl, max_block_size=3)
+    assert v1.endswith("v_1")
+    v1_rows = sorted(map(tuple, spark.read.parquet(v1).collect()))
+    v1_files = sorted(os.listdir(v1))
+    os.remove(os.path.join(bl, "_CURRENT"))
+    assert load_hot_keys(spark, bl) is None
+
+    v2 = refresh_hot_keys(spark, feed, bl, max_block_size=3)
+    assert v2.endswith("v_2")
+    assert sorted(os.listdir(v1)) == v1_files    # v_1 left intact
+    assert sorted(map(tuple, spark.read.parquet(v1).collect())) == v1_rows
+    assert sorted(map(tuple, load_hot_keys(spark, bl).collect())) == v1_rows
